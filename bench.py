@@ -149,150 +149,13 @@ def main() -> None:
     except ValueError:
         sf = -1.0
 
-    from prohap_spark.queries import queries
     from prohap_spark.session import get_spark
 
     spark = get_spark("bench")
-    qs = queries()
-    from prohap_spark.pipeline.synthetic import (
-        run_peptides_e2e,
-        run_prohap_e2e,
-        run_provar_e2e,
-    )
-
-    # register builders; each pass rebuilds its frames untimed (see
-    # run_all). Crash-isolated: one broken query must not kill the
-    # whole bench — it's recorded in `errors` and the rest still
-    # report numbers.
+    builders = bench_builders(spark, sf_dir)
+    # Crash-isolated: one broken query must not kill the whole bench —
+    # it's recorded in `errors` and the rest still report numbers.
     errors: dict[str, str] = {}
-    builders = []
-    for name in HEADLINE:
-        builders.append((name, lambda name=name: qs[name](spark, sf_dir)))
-    # domain pipeline end-to-end (synthetic cohort: 100 transcripts,
-    # 1000 variants, 50 samples → VCF melt → islands → haplotype
-    # grouping → U3 kernel → merge)
-    for name, builder in (
-        ("domain_prohap_e2e", run_prohap_e2e),
-        ("domain_provar_e2e", run_provar_e2e),
-    ):
-        builders.append((name, lambda b=builder: b(spark, scale=1)))
-    # peptide-annotation chain (J6→J11+U4) at corpus scale — the one
-    # §2.9 kernel-adjacent path whose full-pipeline shape was not in
-    # the headline set before r6
-    builders.append(("domain_peptides_e2e", lambda: run_peptides_e2e(spark, sf_dir)))
-
-    # fixed-point PageRank over the supply graph (r7): lazy build so
-    # the six iteration rounds execute inside the timer; the edge
-    # cache it registers is dropped by the between-pass clearCache
-    def build_pagerank():
-        from pyspark.sql import functions as F
-
-        from prohap_spark.operators.graph import pagerank_micro
-        from prohap_spark.queries.classic import _PAGERANK_PART_OFFSET
-        from prohap_spark.queries.registry import table as _table
-
-        li = _table(spark, sf_dir, "lineitem").select("l_suppkey", "l_partkey")
-        fwd = li.select(
-            F.col("l_suppkey").alias("src"),
-            (F.lit(_PAGERANK_PART_OFFSET) + F.col("l_partkey")).alias("dst"),
-        )
-        back = li.where(F.col("l_partkey") % 2 == 0).select(
-            (F.lit(_PAGERANK_PART_OFFSET) + F.col("l_partkey")).alias("src"),
-            F.col("l_suppkey").alias("dst"),
-        )
-        return pagerank_micro(
-            fwd.unionAll(back), "src", "dst", n_iter=6, materialize=False
-        )
-
-    builders.append(("graph_pagerank", build_pagerank))
-
-    # uncapped MinHash-LSH near-dup pairs, timed as the bare operator:
-    # the registered query merged into dedup_minhash_lsh_board in r8
-    # (uncapped ∪ capped legs), which would double the timed work —
-    # this builder keeps the board entry like-for-like with the
-    # dedup_minhash_lsh entries of BENCH_r01..r07
-    def build_minhash():
-        from pyspark.sql import functions as F
-
-        from prohap_spark.operators.dedup import minhash_dedup_pairs
-        from prohap_spark.queries.registry import table as _table
-
-        d = _table(spark, sf_dir, "documents")
-        out = minhash_dedup_pairs(
-            d, "doc_id", "text", threshold=0.6, num_hashes=16, band_size=4, ngram=2
-        )
-        return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-
-    builders.append(("dedup_minhash_lsh", build_minhash))
-
-    # the two sim_embedding_board legs, timed separately under their
-    # historical names (see the HEADLINE note)
-    from prohap_spark.queries.simsearch import (
-        emb_centroid_cosine,
-        sim_bruteforce_topk,
-    )
-
-    builders.append(("sim_bruteforce_topk", lambda: sim_bruteforce_topk(spark, sf_dir)))
-    builders.append(("emb_centroid_cosine", lambda: emb_centroid_cosine(spark, sf_dir)))
-
-    # j1_interval_join_binned merged into j1_interval_board in r12;
-    # the direct builder keeps the bench entry like-for-like with
-    # BENCH_r01..r11 (same device as the legs above)
-    from prohap_spark.queries.windowed import j1_interval_join_binned
-
-    builders.append(
-        ("j1_interval_join_binned", lambda: j1_interval_join_binned(spark, sf_dir))
-    )
-
-    # w1_islands_sessionize / stream_tumbling_window merged into
-    # w1_islands_board / stream_batch_parity_board in the r11 tail;
-    # direct builders keep their bench entries like-for-like with
-    # BENCH_r01..r10 (same device as the sim_embedding_board legs)
-    from prohap_spark.queries.windowed import (
-        stream_tumbling_window,
-        w1_islands_sessionize,
-    )
-
-    builders.append(
-        ("w1_islands_sessionize", lambda: w1_islands_sessionize(spark, sf_dir))
-    )
-    builders.append(
-        ("stream_tumbling_window", lambda: stream_tumbling_window(spark, sf_dir))
-    )
-
-    # Bloom runtime-filter semi-join at its production sizing (see the
-    # HEADLINE note): urgent-orders keys -> m=2^19 filter (~23% fill at
-    # sf0.1), lineitem prefiltered map-side before the exact semi-join.
-    # r14: production configuration also means the production hash —
-    # hash_family='xxh64' (the family Spark's own injected runtime
-    # Bloom uses), replacing the md5-hex+conv probe whose per-row cost
-    # dominated this entry (probe leg measured 1.19 s of the 1.86 s
-    # total; xxh64 probes the same filter shape in ~0.1 s). Output rows
-    # are IDENTICAL — the exact semi-join erases the prefilter's FP
-    # set — so the entry times the same query; the oracle-replayable
-    # md5 family stays on the registered j13 gate untouched.
-    def build_bloom_semi():
-        from pyspark.sql import functions as F
-
-        from prohap_spark.operators.bloom_join import bloom_semi_join
-        from prohap_spark.queries.registry import table as _table
-
-        li = _table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_returnflag", "l_quantity"
-        )
-        dim = _table(spark, sf_dir, "orders").where(
-            F.col("o_orderpriority") == "1-URGENT"
-        ).select("o_orderkey")
-        sj = bloom_semi_join(
-            li, dim, "l_orderkey", "o_orderkey", k=4, m_bits=1 << 19,
-            hash_family="xxh64",
-        )
-        return sj.groupBy("l_returnflag").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("l_quantity"), 2).alias("qty"),
-        )
-
-    builders.append(("j13_bloom_semi_join", build_bloom_semi))
 
     # SPARK_GRAFT_BENCH_MARKERS=1: write a per-query marker line to
     # stderr so JVM log events (e.g. the benign late-accumulator burst
@@ -430,6 +293,149 @@ def main() -> None:
         "field or a non-zero exit.\n"
     )
     spark.stop()
+
+
+def bench_builders(spark, sf_dir: str) -> list:
+    """The bench entries in run order, as (name, thunk) pairs; each
+    thunk builds a fresh DataFrame. Each pass rebuilds its frames
+    untimed (see run_all)."""
+    from prohap_spark.pipeline.synthetic import (
+        run_peptides_e2e,
+        run_prohap_e2e,
+        run_provar_e2e,
+    )
+    from prohap_spark.queries import queries
+
+    qs = queries()
+    builders = []
+    for name in HEADLINE:
+        builders.append((name, lambda name=name: qs[name](spark, sf_dir)))
+    # domain pipeline end-to-end (synthetic cohort: 100 transcripts,
+    # 1000 variants, 50 samples → VCF melt → islands → haplotype
+    # grouping → U3 kernel → merge)
+    for name, builder in (
+        ("domain_prohap_e2e", run_prohap_e2e),
+        ("domain_provar_e2e", run_provar_e2e),
+    ):
+        builders.append((name, lambda b=builder: b(spark, scale=1)))
+    # peptide-annotation chain (J6→J11+U4) at corpus scale — the one
+    # §2.9 kernel-adjacent path whose full-pipeline shape was not in
+    # the headline set before r6
+    builders.append(("domain_peptides_e2e", lambda: run_peptides_e2e(spark, sf_dir)))
+
+    # fixed-point PageRank over the supply graph (r7): lazy build so
+    # the six iteration rounds execute inside the timer; the edge
+    # cache it registers is dropped by the between-pass clearCache
+    def build_pagerank():
+        from pyspark.sql import functions as F
+
+        from prohap_spark.operators.graph import pagerank_micro
+        from prohap_spark.queries.classic import _PAGERANK_PART_OFFSET
+        from prohap_spark.queries.registry import table as _table
+
+        li = _table(spark, sf_dir, "lineitem").select("l_suppkey", "l_partkey")
+        fwd = li.select(
+            F.col("l_suppkey").alias("src"),
+            (F.lit(_PAGERANK_PART_OFFSET) + F.col("l_partkey")).alias("dst"),
+        )
+        back = li.where(F.col("l_partkey") % 2 == 0).select(
+            (F.lit(_PAGERANK_PART_OFFSET) + F.col("l_partkey")).alias("src"),
+            F.col("l_suppkey").alias("dst"),
+        )
+        return pagerank_micro(
+            fwd.unionAll(back), "src", "dst", n_iter=6, materialize=False
+        )
+
+    builders.append(("graph_pagerank", build_pagerank))
+
+    # uncapped MinHash-LSH near-dup pairs, timed as the bare operator:
+    # the registered query merged into dedup_minhash_lsh_board in r8
+    # (uncapped ∪ capped legs), which would double the timed work —
+    # this builder keeps the board entry like-for-like with the
+    # dedup_minhash_lsh entries of BENCH_r01..r07
+    def build_minhash():
+        from pyspark.sql import functions as F
+
+        from prohap_spark.operators.dedup import minhash_dedup_pairs
+        from prohap_spark.queries.registry import table as _table
+
+        d = _table(spark, sf_dir, "documents")
+        out = minhash_dedup_pairs(
+            d, "doc_id", "text", threshold=0.6, num_hashes=16, band_size=4, ngram=2
+        )
+        return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+
+    builders.append(("dedup_minhash_lsh", build_minhash))
+
+    # the two sim_embedding_board legs, timed separately under their
+    # historical names (see the HEADLINE note)
+    from prohap_spark.queries.simsearch import (
+        emb_centroid_cosine,
+        sim_bruteforce_topk,
+    )
+
+    builders.append(("sim_bruteforce_topk", lambda: sim_bruteforce_topk(spark, sf_dir)))
+    builders.append(("emb_centroid_cosine", lambda: emb_centroid_cosine(spark, sf_dir)))
+
+    # j1_interval_join_binned merged into j1_interval_board in r12;
+    # the direct builder keeps the bench entry like-for-like with
+    # BENCH_r01..r11 (same device as the legs above)
+    from prohap_spark.queries.windowed import j1_interval_join_binned
+
+    builders.append(
+        ("j1_interval_join_binned", lambda: j1_interval_join_binned(spark, sf_dir))
+    )
+
+    # w1_islands_sessionize / stream_tumbling_window merged into
+    # w1_islands_board / stream_batch_parity_board in the r11 tail;
+    # direct builders keep their bench entries like-for-like with
+    # BENCH_r01..r10 (same device as the sim_embedding_board legs)
+    from prohap_spark.queries.windowed import (
+        stream_tumbling_window,
+        w1_islands_sessionize,
+    )
+
+    builders.append(
+        ("w1_islands_sessionize", lambda: w1_islands_sessionize(spark, sf_dir))
+    )
+    builders.append(
+        ("stream_tumbling_window", lambda: stream_tumbling_window(spark, sf_dir))
+    )
+
+    # Bloom runtime-filter semi-join at its production sizing (see the
+    # HEADLINE note): urgent-orders keys -> m=2^19 filter (~23% fill at
+    # sf0.1), lineitem prefiltered map-side before the exact semi-join.
+    # r14: production configuration also means the production hash —
+    # hash_family='xxh64' (the family Spark's own injected runtime
+    # Bloom uses), replacing the md5-hex+conv probe whose per-row cost
+    # dominated this entry (probe leg measured 1.19 s of the 1.86 s
+    # total; xxh64 probes the same filter shape in ~0.1 s). Output rows
+    # are IDENTICAL — the exact semi-join erases the prefilter's FP
+    # set — so the entry times the same query; the oracle-replayable
+    # md5 family stays on the registered j13 gate untouched.
+    def build_bloom_semi():
+        from pyspark.sql import functions as F
+
+        from prohap_spark.operators.bloom_join import bloom_semi_join
+        from prohap_spark.queries.registry import table as _table
+
+        li = _table(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_returnflag", "l_quantity"
+        )
+        dim = _table(spark, sf_dir, "orders").where(
+            F.col("o_orderpriority") == "1-URGENT"
+        ).select("o_orderkey")
+        sj = bloom_semi_join(
+            li, dim, "l_orderkey", "o_orderkey", k=4, m_bits=1 << 19,
+            hash_family="xxh64",
+        )
+        return sj.groupBy("l_returnflag").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.round(F.sum("l_quantity"), 2).alias("qty"),
+        )
+
+    builders.append(("j13_bloom_semi_join", build_bloom_semi))
+    return builders
 
 
 if __name__ == "__main__":

@@ -1,7 +1,7 @@
 """Higher-order-function evaluation helpers.
 
-THE COST MODEL (measured three times over in r11 —
-tools/cdc_scale_probe.py and the k-means/band-table commits): Spark
+THE COST MODEL (measured three times over in r11 — the CDC chunker
+scaling table in NOTES_ROUND11 and the k-means/band-table commits): Spark
 evaluates higher-order-function lambda bodies per element with NO
 subexpression elimination, and CollapseProject happily inlines a
 single-referenced alias back into a lambda body. Two consequences:

@@ -3,8 +3,8 @@ parquet store.
 
 Streaming sinks, incremental ingests, and over-parallel writes leave
 thousands of KB-sized files; every reader then pays per-file open/
-footer/scheduling costs that dwarf the data (tools/small_files_probe.py
-measures the cliff). Compaction rewrites a directory into
+footer/scheduling costs that dwarf the data (NOTES_ROUND8 measures
+the cliff). Compaction rewrites a directory into
 size-targeted files WITHOUT changing a single row.
 
 Safety discipline (the write_dedup_index lesson applied to rewrites):

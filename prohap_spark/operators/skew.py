@@ -5,7 +5,7 @@ variants and chr1 is ~10× chr21 — classic shuffle skew. Two levers:
 
 1. AQE skew-join splitting — pinned on BOTH the session factory and
    the engine child session (queries/registry.py engine_session):
-   the r8 probe (tools/skew_join_probe.py) found that runtime confs
+   the r8 skew-join measurement (NOTES_ROUND8) found that runtime confs
    set on a caller's parent session never reach frames planned on the
    child, so the engine pins them where its frames actually execute
    (regression test: tests/test_plans.py
@@ -15,7 +15,7 @@ variants and chr1 is ~10× chr21 — classic shuffle skew. Two levers:
    two-phase salted aggregate below, and a salted broadcast-replicate
    join for hot build keys.
 
-Mitigation hierarchy, MEASURED at 32x (tools/skew_join_probe.py, r8,
+Mitigation hierarchy, MEASURED at 32x (NOTES_ROUND8,
 ~60% of rows on one hot key): broadcast (skew never shuffles) > AQE
 skew split (6.8 s) > salted join (8.9 s — pays small-side
 replication) > nothing (40.1 s, single-straggler speed).

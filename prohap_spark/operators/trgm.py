@@ -147,7 +147,7 @@ def append_trigram_index(
     build-on-the-delta + union — the corpus TEXT is never re-shingled
     (the CPU-heavy part is O(|delta|)), but the merged posting table
     is still REWRITTEN wholesale, so the I/O is O(|index|).
-    tools/trgm_append_probe.py measures this honestly: at 16x base
+    NOTES_ROUND13 measures this honestly: at 16x base
     size append ≈ rebuild in wall time on this box (posting-table I/O
     dominates at gate scale). The true 100 TB shape is SEGMENTED
     ingest — write each delta as its own manifest-validated segment

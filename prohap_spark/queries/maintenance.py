@@ -191,8 +191,8 @@ def _bloomskip_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
     sits BELOW bloom_plan's answer for this key density (the j13
     discipline): the gate exercises the saturated-filter regime where
     fp survivors are plentiful and must STILL replay exactly;
-    tools/bloomskip_scale_probe.py carries the planner-sized
-    prune-rate evidence (1.25/64 files at m=65536)."""
+    NOTES_ROUND13 carries the planner-sized prune-rate evidence
+    (1.25/64 files at m=65536)."""
     from prohap_spark.operators.zonemap import build_bloom_skip
 
     src = _li_fid_src(spark, sf_dir)

@@ -1,9 +1,10 @@
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from prohap_spark.session import ENGINE_CONF
 
 # name -> (fn(spark, sf_dir) -> DataFrame, oracle_sql | None)
 REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {}
@@ -24,50 +25,22 @@ _ENGINE_SESSIONS: dict[int, SparkSession] = {}
 
 def engine_session(spark: SparkSession) -> SparkSession:
     """A child SparkSession (same SparkContext, isolated SQL conf) with
-    the engine's required settings: UTC session timezone (so
-    TIMESTAMP_NTZ→TIMESTAMP casts match the TZ-naive DuckDB oracle
-    regardless of the caller's zone) and nanos-as-long parquet reads.
-    Queries run on the CALLER's session (the driver's, not ours) —
+    the engine's runtime confs (session.ENGINE_CONF) plus nanos-as-long
+    parquet reads. Queries run on the CALLER's session, not ours —
     mutating its conf would leak engine settings into user code; a
     returned DataFrame executes under its OWN session's conf, so the
-    isolation is free."""
+    isolation is free. The confs are pinned here, not only in the
+    session factory, because a vanilla caller session sets none of
+    them and confs set on a PARENT session at runtime never reach
+    frames planned on this child (NOTES_ROUND8; tests/test_plans.py
+    pins the inheritance)."""
     key = id(spark)
     child = _ENGINE_SESSIONS.get(key)
     if child is None:
         child = spark.newSession()
-        child.conf.set("spark.sql.session.timeZone", "UTC")
+        for k, v in ENGINE_CONF.items():
+            child.conf.set(k, v)
         child.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # see session.py: the inferred size(e)>0 filter below a Generate
-        # re-inlines expensive computed-array expressions (-20% on the
-        # LSH family); the driver's vanilla session doesn't set this,
-        # so the engine child must
-        child.conf.set(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
-        # AQE + skew-join splitting pinned HERE, not just in the
-        # session factory: the r8 skew probe (tools/skew_join_probe.py)
-        # measured unmitigated skewed SMJ at ~6x the AQE-split wall AND
-        # found that confs set on a PARENT session at runtime never
-        # reach frames planned on this child — so the mitigation the
-        # engine relies on must be pinned on the session its frames
-        # actually execute under, independent of the caller's conf
-        # (tests/test_plans.py pins the inheritance).
-        for k_, v_ in (
-            ("spark.sql.adaptive.enabled", "true"),
-            ("spark.sql.adaptive.skewJoin.enabled", "true"),
-            ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-            # byte-blind coalescing serializes small-byte/expensive-row
-            # Arrow kernel stages behind one task — see session.py for
-            # the measured r9 case (ProHap kernel 3.6 s -> 1.8 s);
-            # same env override as session.py so the documented knob
-            # reaches the session registered queries actually run on
-            (
-                "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-                os.environ.get("SPARK_GRAFT_MIN_COALESCE", "64kb"),
-            ),
-        ):
-            child.conf.set(k_, v_)
         _ENGINE_SESSIONS[key] = child
     return child
 

@@ -78,7 +78,7 @@ def j9_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     side, nested-loop only against it — through the bounded
     ``containment_join`` operator, whose enforced max_probe_rows is
     the SURVEY "keep right side small" contract made loud (scaling
-    measured in tools/containment_scale_probe.py)."""
+    measured in NOTES_ROUND8)."""
     from prohap_spark.operators.containment import containment_join
 
     d = table(spark, sf_dir, "documents")

@@ -2540,9 +2540,9 @@ def corpus_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def curation_funnel(d: DataFrame, share_scan: bool = True) -> DataFrame:
-    """The funnel body over any (doc_id, source, text) frame — shared
-    by the registered oracle query and tools/docs_scale_probe.py's
-    replicated-corpus scaling leg. ``share_scan=False`` disables the
+    """The funnel body over any (doc_id, source, text) frame. On the
+    sf0.1 corpus replicated 16x it measured 18.8 s, 2.3x the 1x wall
+    (NOTES_ROUND6). ``share_scan=False`` disables the
     flags checkpoint below (preemptible-cluster escape hatch, like
     every share_scan in this codebase)."""
     from pyspark.sql import Window

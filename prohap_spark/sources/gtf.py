@@ -49,7 +49,9 @@ def read_gtf(spark: SparkSession, path: str) -> DataFrame:
         attr("gene_name").alias("gene_name"),
         attr("transcript_biotype").alias("biotype"),
         F.regexp_extract_all(F.col("attributes"), F.lit(r'tag "([^"]+)"'), 1).alias("tags"),
-        F.regexp_extract(F.col("attributes"), r'exon_number "?(\d+)"?', 1)
+        # regexp_extract yields '' on rows without an exon_number, and
+        # casting '' fails under ANSI mode: map it to NULL first
+        F.nullif(F.regexp_extract(F.col("attributes"), r'exon_number "?(\d+)"?', 1), F.lit(""))
         .cast("int")
         .alias("exon_number"),
     )

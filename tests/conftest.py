@@ -1,8 +1,16 @@
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this conftest lives in, so a copy of the repo tests itself
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+
+@pytest.fixture(scope="session")
+def repo_root():
+    return ROOT
 
 
 @pytest.fixture(scope="session")

@@ -3,9 +3,6 @@ epoch-keyed foreachBatch writer."""
 
 import datetime as dt
 import os
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 

@@ -4,9 +4,6 @@ FASTA output, single-file and globbed, plain and gzipped."""
 
 import glob
 import os
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 import pytest
 

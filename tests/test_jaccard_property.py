@@ -103,7 +103,7 @@ def test_prefix_positional_matches_block_and_bruteforce(spark):
 
 def test_prefix_candidates_grow_linearly_under_fresh_content(spark):
     """The scale claim behind the prefix strategy, pinned at test
-    scale (tools/jaccard_scale_probe.py measures it at sf0.1): when a
+    scale (NOTES_ROUND10 records it at sf0.1): when a
     corpus doubles with FRESH content (disjoint vocabulary — the
     realistic growth model), positional candidates must grow ~linearly
     while block pairs grow ~quadratically. Deterministic corpus: R

@@ -7,10 +7,6 @@ gates (operators/validate.py) answer "is this table acceptable";
 observe() answers "what flowed through THIS run" — both feed the same
 governance dashboards."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import Observation, functions as F
 
 

@@ -3011,7 +3011,7 @@ def test_cdc_rolling_kernel_properties(spark):
 def test_containment_join_matched_volume_scales_linearly(spark):
     """The J9 scale claim, pinned at test scale the way the jaccard
     prefix-candidate growth was pinned in r10
-    (tools/containment_scale_probe.py measures walls at sf0.1): under
+    (NOTES_ROUND8 records walls at sf0.1): under
     the probe's replica model — replica-prefixed text, probes cut from
     the prefixed text, so a probe can only match its OWN replica —
     matched volume (output rows) must grow LINEARLY along each axis:

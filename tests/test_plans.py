@@ -649,34 +649,29 @@ def test_engine_child_session_pins_aqe_skew_confs(spark):
     """The r8 skew probe's sharpest trap: runtime confs set on the
     CALLER's session never reach frames planned on the engine child
     session — every leg of the probe's first run silently planned as
-    if skew handling were irrelevant. The engine therefore pins the
-    AQE skew-split confs on the child itself (queries/registry.py);
-    this test simulates a hostile caller (skew handling disabled on
-    the parent at runtime) and asserts (a) the child still carries the
-    pinned confs and (b) a frame built through table() actually
+    if skew handling were irrelevant. The engine therefore pins
+    session.ENGINE_CONF on the child itself (queries/registry.py);
+    this test checks a get_spark session carries every ENGINE_CONF
+    key, simulates a hostile caller (skew handling disabled on the
+    parent at runtime) and asserts (a) the child still carries every
+    ENGINE_CONF key and (b) a frame built through table() actually
     executes under that child session, not the caller's."""
     from prohap_spark.queries.registry import engine_session, table
+    from prohap_spark.session import ENGINE_CONF
+
+    # a fresh session off the fixture's context starts from the confs
+    # get_spark created it with, whatever other tests set at runtime
+    fresh = spark.newSession()
+    for k, v in ENGINE_CONF.items():
+        assert fresh.conf.get(k) == v, k
 
     parent_prev = spark.conf.get("spark.sql.adaptive.skewJoin.enabled")
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         child = engine_session(spark)
-        for k in (
-            "spark.sql.adaptive.enabled",
-            "spark.sql.adaptive.skewJoin.enabled",
-            "spark.sql.adaptive.coalescePartitions.enabled",
-        ):
-            assert child.conf.get(k) == "true", k
-        # and the anti-serialization coalesce floor (see session.py)
-        # — same env-overridable expression as session.py, so the
-        # documented SPARK_GRAFT_MIN_COALESCE knob reaches the session
-        # registered queries actually execute on (r9 advice)
-        import os
-
-        assert child.conf.get(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-        ) == os.environ.get("SPARK_GRAFT_MIN_COALESCE", "64kb")
+        for k, v in ENGINE_CONF.items():
+            assert child.conf.get(k) == v, k
         df = table(spark, SF, "lineitem")
         sess = df.sparkSession
         assert sess.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
@@ -790,8 +785,10 @@ def test_prohap_haplotype_chain_one_carrier_exchange(spark):
     from prohap_spark.plans import formatted_plan
 
     plan = formatted_plan(run_prohap_e2e(spark, scale=1))
-    shuffles = re.findall(r"[+:]- Exchange \(", plan)
-    assert len(shuffles) == 3, f"expected 3 shuffle exchanges, got {len(shuffles)}"
+    shuffles = [ln for ln in plan.splitlines() if re.search(r"[+:]- Exchange \(", ln)]
+    assert len(shuffles) == 3, (
+        f"expected 3 shuffle exchanges, got {len(shuffles)}:\n" + "\n".join(shuffles)
+    )
     assert "hashpartitioning(transcript_id" in plan
 
 

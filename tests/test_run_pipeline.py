@@ -100,3 +100,28 @@ def test_prohap_min_count_10_filters_all(spark, tmp_path):
     tsv_files = glob.glob(f"{out['tsv']}/part-*.csv.gz")
     with gzip.open(tsv_files[0], "rt") as f:
         assert len(f.readlines()) == 1  # header only
+
+
+def test_runners_release_their_cache(spark, tmp_path):
+    """Both runners persist the table their two sinks share; back-to-back
+    runs in one session must leave nothing cached behind."""
+    from prohap_spark.pipeline.run import (
+        ProHapConfig,
+        run_prohap_pipeline,
+        run_provar_pipeline,
+    )
+
+    # other tests' checkpoints may still be registered on the shared context
+    before = set(spark.sparkContext._jsc.getPersistentRDDs())
+    gtf, fasta, vcf = write_fixtures(tmp_path)
+    for i, run in enumerate((run_prohap_pipeline, run_provar_pipeline)):
+        cfg = ProHapConfig(
+            vcf_path=vcf,
+            gtf_path=gtf,
+            cdna_fasta_path=fasta,
+            samples_tsv_path=_samples_tsv(tmp_path),
+            output_dir=str(tmp_path / f"out{i}"),
+            haplo_min_count=1,
+        )
+        run(spark, cfg)
+    assert set(spark.sparkContext._jsc.getPersistentRDDs()) <= before

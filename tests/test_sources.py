@@ -32,6 +32,21 @@ def test_read_gtf_dimensions(spark, fixture_paths):
     assert tr["T1"]["biotype"] == "protein_coding"
 
 
+def test_read_gtf_collects_under_default_ansi(spark, tmp_path):
+    """exon_number is absent on non-exon rows; the full feature table
+    must still materialise under Spark 4's default ANSI mode."""
+    from prohap_spark.sources.gtf import read_gtf
+
+    attrs = 'gene_id "G1"; transcript_id "T1";'
+    gtf = tmp_path / "one.gtf"
+    gtf.write_text(
+        f"1\tsrc\ttranscript\t101\t230\t.\t+\t.\t{attrs}\n"
+        f'1\tsrc\texon\t101\t130\t.\t+\t.\t{attrs} exon_number "1";\n'
+    )
+    rows = read_gtf(spark, str(gtf)).collect()
+    assert {r["feature"]: r["exon_number"] for r in rows} == {"transcript": None, "exon": 1}
+
+
 def test_mane_selection(spark, fixture_paths):
     from prohap_spark.sources.gtf import gtf_dimensions, read_gtf, select_mane_or_canonical
 

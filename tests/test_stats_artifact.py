@@ -1,9 +1,5 @@
 """operators/stats.py: mergeable, persistable column statistics."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import pytest
 from pyspark.sql import functions as F
 

@@ -1,9 +1,6 @@
 """operators/trgm.py: trigram posting index for substring search."""
 
 import random
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 import pytest
 from pyspark.sql import functions as F

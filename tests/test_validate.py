@@ -1,9 +1,5 @@
 """operators/validate.py: constraint checking + snapshot diff."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
 from prohap_spark.operators.validate import (

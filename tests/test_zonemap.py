@@ -1,9 +1,6 @@
 """operators/zonemap.py: explicit file-skipping zone maps."""
 
 import random
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 import pytest
 from pyspark.sql import functions as F

@@ -1,13 +1,14 @@
-"""Optimization profiler (r14; plans dir now per-round via $SPARK_GRAFT_PLANS_ROUND): isolate each bench query with the noop
-sink (guide §1.4), label jobs (§1.5), capture .explain("formatted")
-to plans/<round>/<name>_<tag>.txt, and print per-query wall seconds.
+"""Optimization profiler: isolate each bench query with the noop sink,
+label its jobs, capture .explain("formatted") to
+<plans-dir>/<name>_<tag>.txt, and print per-query wall seconds.
 
 Usage:
-    python tools/opt_profile.py [--tag before|after] [--passes 3] [q ...]
+    python tools/opt_profile.py --plans-dir plans/r16 [--tag before|after]
+        [--passes 3] [--no-run] [q ...]
 
-Reuses bench.py's builder registry so the timed computation is
-EXACTLY the bench's shape; runs one warm pass then N timed passes and
-reports the min (bench protocol).
+Uses bench.py's builder list (bench_builders) so the timed computation
+is EXACTLY the bench's shape; runs one warm pass then N timed passes
+and reports the min (bench protocol).
 """
 
 from __future__ import annotations
@@ -23,116 +24,24 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def build_builders(spark, sf_dir):
-    """Replicate bench.py's builder list (name -> thunk)."""
-    import bench as bench_mod
-    from prohap_spark.queries import queries
-
-    qs = queries()
-    from prohap_spark.pipeline.synthetic import (
-        run_peptides_e2e,
-        run_prohap_e2e,
-        run_provar_e2e,
-    )
-
-    builders = {}
-    for name in bench_mod.HEADLINE:
-        builders[name] = lambda name=name: qs[name](spark, sf_dir)
-    builders["domain_prohap_e2e"] = lambda: run_prohap_e2e(spark, scale=1)
-    builders["domain_provar_e2e"] = lambda: run_provar_e2e(spark, scale=1)
-    builders["domain_peptides_e2e"] = lambda: run_peptides_e2e(spark, sf_dir)
-
-    from pyspark.sql import functions as F
-
-    from prohap_spark.operators.bloom_join import bloom_semi_join
-    from prohap_spark.operators.dedup import minhash_dedup_pairs
-    from prohap_spark.operators.graph import pagerank_micro
-    from prohap_spark.queries.classic import _PAGERANK_PART_OFFSET
-    from prohap_spark.queries.registry import table as _table
-    from prohap_spark.queries.simsearch import (
-        emb_centroid_cosine,
-        sim_bruteforce_topk,
-    )
-    from prohap_spark.queries.windowed import (
-        j1_interval_join_binned,
-        stream_tumbling_window,
-        w1_islands_sessionize,
-    )
-
-    def build_pagerank():
-        li = _table(spark, sf_dir, "lineitem").select("l_suppkey", "l_partkey")
-        fwd = li.select(
-            F.col("l_suppkey").alias("src"),
-            (F.lit(_PAGERANK_PART_OFFSET) + F.col("l_partkey")).alias("dst"),
-        )
-        back = li.where(F.col("l_partkey") % 2 == 0).select(
-            (F.lit(_PAGERANK_PART_OFFSET) + F.col("l_partkey")).alias("src"),
-            F.col("l_suppkey").alias("dst"),
-        )
-        return pagerank_micro(
-            fwd.unionAll(back), "src", "dst", n_iter=6, materialize=False
-        )
-
-    builders["graph_pagerank"] = build_pagerank
-
-    def build_minhash():
-        d = _table(spark, sf_dir, "documents")
-        out = minhash_dedup_pairs(
-            d, "doc_id", "text", threshold=0.6, num_hashes=16, band_size=4, ngram=2
-        )
-        return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-
-    builders["dedup_minhash_lsh"] = build_minhash
-    builders["sim_bruteforce_topk"] = lambda: sim_bruteforce_topk(spark, sf_dir)
-    builders["emb_centroid_cosine"] = lambda: emb_centroid_cosine(spark, sf_dir)
-    builders["j1_interval_join_binned"] = lambda: j1_interval_join_binned(
-        spark, sf_dir
-    )
-    builders["w1_islands_sessionize"] = lambda: w1_islands_sessionize(spark, sf_dir)
-    builders["stream_tumbling_window"] = lambda: stream_tumbling_window(
-        spark, sf_dir
-    )
-
-    def build_bloom_semi():
-        li = _table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_returnflag", "l_quantity"
-        )
-        dim = _table(spark, sf_dir, "orders").where(
-            F.col("o_orderpriority") == "1-URGENT"
-        ).select("o_orderkey")
-        sj = bloom_semi_join(
-            li, dim, "l_orderkey", "o_orderkey", k=4, m_bits=1 << 19,
-            hash_family="xxh64",
-        )
-        return sj.groupBy("l_returnflag").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("l_quantity"), 2).alias("qty"),
-        )
-
-    builders["j13_bloom_semi_join"] = build_bloom_semi
-    return builders
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*", help="query names (default: all)")
     ap.add_argument("--tag", default=None, help="save plans as <name>_<tag>.txt")
     ap.add_argument("--passes", type=int, default=3)
     ap.add_argument("--no-run", action="store_true", help="plans only, no timing")
+    ap.add_argument("--plans-dir", required=True, help="directory for --tag plan dumps")
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from bench import bench_builders
     from prohap_spark.session import get_spark
 
     spark = get_spark("opt-profile")
-    builders = build_builders(spark, sf_dir)
+    builders = dict(bench_builders(spark, sf_dir))
     names = args.names or list(builders)
 
-    plans_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans",
-        os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r15"),
-    )
-    os.makedirs(plans_dir, exist_ok=True)
+    os.makedirs(args.plans_dir, exist_ok=True)
 
     results = {}
     for name in names:
@@ -145,7 +54,7 @@ def main() -> None:
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
                 df.explain("formatted")
-            with open(os.path.join(plans_dir, f"{name}_{args.tag}.txt"), "w") as f:
+            with open(os.path.join(args.plans_dir, f"{name}_{args.tag}.txt"), "w") as f:
                 f.write(buf.getvalue())
         if args.no_run:
             continue

@@ -26,12 +26,14 @@ or write artifacts at build time are excluded by design.
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = "/root/testdata/sf0.01"
-SNAPSHOT = "/root/repo/PLAN_SNAPSHOTS.json"
+SNAPSHOT = os.path.join(ROOT, "PLAN_SNAPSHOTS.json")
 
 # side-effect-free, structurally load-bearing queries
 QUERIES = [

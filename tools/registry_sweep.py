@@ -12,10 +12,11 @@ Usage: python tools/registry_sweep.py [min_sec_to_print]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.1"
 MIN_PRINT = float(sys.argv[1]) if len(sys.argv) > 1 else 0.0

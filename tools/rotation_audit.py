@@ -26,10 +26,12 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 BUDGET = 50
 if "--budget" in sys.argv:
@@ -48,7 +50,7 @@ def main() -> int:
     from prohap_spark.queries import _ordered, oracle_sql, ROWS_ONLY_BY_DESIGN
 
     rounds = {}
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
         m = re.search(r"_r(\d+)\.json$", path)
         with open(path) as f:
             rounds[int(m.group(1))] = json.load(f)
@@ -69,7 +71,7 @@ def main() -> int:
     # query can only claim the "registered this round" exemption ONCE —
     # without it, a forgotten mid-registry query would stay exempt
     # forever and the window invariant would be silently waived.
-    manifest_path = "/root/repo/ROTATION_MANIFEST.json"
+    manifest_path = os.path.join(ROOT, "ROTATION_MANIFEST.json")
     build_round = latest + 1
     try:
         with open(manifest_path) as f:

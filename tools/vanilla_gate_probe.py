@@ -18,11 +18,13 @@ Usage: python tools/vanilla_gate_probe.py [--tz ZONE] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "tools"))
 
 from check import SF_DIR, TABLES, value_hash  # noqa: E402
 

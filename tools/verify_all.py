@@ -18,6 +18,7 @@ Exit 0 iff every stage passed.
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 import time
@@ -44,7 +45,8 @@ def main() -> int:
             continue
         t0 = time.monotonic()
         r = subprocess.run(
-            cmd, cwd="/root/repo", capture_output=True, text=True
+            cmd, cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            capture_output=True, text=True,
         )
         wall = time.monotonic() - t0
         ok = r.returncode == 0
